@@ -11,9 +11,70 @@ directory layout (``partition_by``).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from dask_awkward_sandbox_spark.session import scoped_conf
+
+# Session confs under which the same files infer to a different schema;
+# a memo entry holds only under the values it was inferred with.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> ((listing, inference conf values), inferred schema)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _listing(path: str) -> tuple | None:
+    """Sorted ``(relative name, size, mtime_ns)`` of every file under a
+    local parquet file or directory; None for anything else (a remote
+    URI, a glob), which the memo then leaves alone."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for root, _dirs, names in os.walk(path):
+        for n in names:
+            f = os.path.join(root, n)
+            st = os.stat(f)
+            out.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers each path's schema once.
+
+    Inference is a Spark job (``ParquetFileFormat`` reads footers with
+    ``mergeSchemasInParallel``) run while the plan is BUILT, once per
+    read. Reading the same unchanged files again under the same
+    inference confs passes the remembered schema through
+    ``spark.read.schema(...)`` instead, so building a plan over tables
+    already read runs no job — as a typetracer-built graph reads the
+    footer once and never again. Any change to the files (name, size
+    or mtime of any of them) or to a conf in ``_INFERENCE_CONFS``
+    infers afresh. Callers that scope an inference conf (the events
+    read under ``nanosAsLong``) must call this inside the scope."""
+    listing = _listing(path)
+    if listing is None:
+        return spark.read.parquet(path)
+    key = os.path.abspath(path)
+    token = (listing, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == token:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (token, df.schema)
+    return df
 
 
 def from_parquet(
@@ -27,7 +88,7 @@ def from_parquet(
     ``columns`` projects eagerly so the pruned ReadSchema is visible
     even before downstream ops; Catalyst would also derive it lazily.
     """
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if columns:
         df = df.select(*columns)
     return df
@@ -89,16 +150,8 @@ def to_bucketed_table(
         # would silently split buckets into multiple files, and Spark
         # drops sort metadata for multi-file buckets — the advertised
         # Sort elision would quietly disappear. Clear it for this write.
-        spark = df.sparkSession
-        key = "spark.sql.files.maxRecordsPerFile"
-        prev = spark.conf.get(key, None)
-        try:
-            if prev not in (None, "0"):
-                spark.conf.set(key, "0")
+        with scoped_conf(df.sparkSession, "spark.sql.files.maxRecordsPerFile", "0"):
             w.saveAsTable(table)
-        finally:
-            if prev not in (None, "0"):
-                spark.conf.set(key, prev)
     else:
         w = df.write.format("parquet").mode(mode).bucketBy(num_buckets, bucket_by)
         w.saveAsTable(table)

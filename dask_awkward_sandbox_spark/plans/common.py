@@ -7,6 +7,9 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_awkward_sandbox_spark.io.parquet import read_parquet
+from dask_awkward_sandbox_spark.session import scoped_conf
+
 ITEM_FIELDS = [
     "l_linenumber",
     "l_quantity",
@@ -49,6 +52,8 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
 
 
 def read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` of ``sf_dir`` through the memoized parquet read
+    (:func:`~dask_awkward_sandbox_spark.io.parquet.read_parquet`)."""
     if name == "events":
         # events.parquet's ``ts`` precision varies by generator run:
         # timestamp[ns] (Spark reads nanos only as long, legacy conf) or
@@ -59,16 +64,10 @@ def read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # SCOPED: captured into the DataFrame at read time, then
         # restored so unrelated reads on the shared session are
         # untouched (verified: execution after restore stays correct).
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
-            df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        # The memo lookup sits inside the scope, so a remembered schema
+        # is the one inference under the conf gives.
+        with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
+            df = read_parquet(spark, f"{sf_dir}/events.parquet")
         from pyspark.sql.types import LongType, TimestampNTZType
 
         if isinstance(df.schema["ts"].dataType, LongType):
@@ -91,7 +90,7 @@ def read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "update the dispatch in plans/common.py:read"
             )
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def cents(col: Column) -> Column:
@@ -104,95 +103,7 @@ def cents(col: Column) -> Column:
     return F.round(col * 100).cast("long")
 
 
-def shared_lineitem(
-    spark: SparkSession, sf_dir: str, fields: list[str]
-) -> DataFrame:
-    """ONE persisted narrow projection of lineitem feeding every
-    branch of a gate slot — BUILT, MEASURED, AND REJECTED for the
-    registered plans (r12, verdict item 5). Retained only as the
-    cache-form builder for the A/B probe (scripts/hof_form_ab.py).
-
-    The idea: the flat codegen legs and the sampled hof_* twin read
-    the same ``InMemoryRelation``, so the executed plan carries one
-    lineitem FileScan (``l_orderkey % 50`` prunes no row groups, so
-    the two-scan form re-reads the whole table). Persist rather than
-    ``repartition`` + ReusedExchange because per-branch column pruning
-    and filter pushdown rewrite the exchange subtrees differently and
-    canonicalized-plan reuse never fires (measured), while cache
-    substitution matches the analyzed plan and survives both
-    branches' rewrites.
-
-    The measurement (SCALE_SF10.json ``hof_form_ab``): ISOLATED
-    min-of-2 puts the two forms within ~10% of each other (the second
-    scan of a narrow parquet projection is near-free) — but inside
-    the 48-slot panel's long JVM session the cache form COLLAPSED
-    2-3x on every re-coupled slot (q_cartesian_combinations sf10
-    22.5s vs 10.2s two-scan; q_concatenate doubled at both scales):
-    materializing a 60M-row columnar cache inside aged executors
-    triggers eviction/GC churn the stateless scan form never pays.
-    The registered slots therefore keep two scans (robust under
-    session aging, parity when fresh); the order-grained
-    q_parquet_roundtrip frame (|orders| rows, five consumers of an
-    expensive nested scan) is the one place the persist measured
-    neutral-to-better and stays. At 100 TB the real fix is bucketing
-    lineitem by l_orderkey, which removes the rebuild shuffle
-    entirely and makes both forms moot.
-    """
-    return read(spark, sf_dir, "lineitem").select("l_orderkey", *fields).persist()
-
-
-def _raw_conf_get(spark: SparkSession, key: str) -> str | None:
-    """The EXPLICITLY-SET session value of ``key``, or None when the
-    key is unset (r15, advice fix): ``spark.conf.get(key, None)``
-    returns a registered SQL conf's entry DEFAULT instead of None
-    when the key is unset, so a restore path keyed on it would pin
-    the default as an explicit session value — value-equivalent
-    today, but masking any later default/entry change. The raw
-    settings map only holds explicit entries."""
-    try:
-        return spark._jsparkSession.sessionState().conf().settings().get(key)
-    except Exception:  # pragma: no cover — non-JVM session stand-ins
-        return spark.conf.get(key, None)
-
-
-class scoped_conf:
-    """Set one Spark SQL conf for the duration of a block and restore
-    the previous value (or unset) on exit — the generic form of the
-    scoped-conf pattern :class:`bucketed_sort_scan` and the streaming
-    slots' shuffle scoping already use (r14 optimization round). Only
-    sound for confs read at PLAN/EXECUTION time of work that both
-    happens inside the block; callers must run their eager actions
-    inside the ``with``.
-
-    Concurrency (r15, advice note): the conf is SESSION-GLOBAL — any
-    query planned concurrently on the same session while a block is
-    open also sees the scoped value. The bench/test harness runs
-    queries single-threaded per session, which is the assumption this
-    helper (and the module-level caches like lm._TOK_CACHE) rely on;
-    concurrent-driver deployments should scope confs per thread with
-    ``SparkSession.newSession()`` instead."""
-
-    def __init__(self, spark: SparkSession, key: str, value: str):
-        self.spark = spark
-        self.key = key
-        self.value = value
-
-    def __enter__(self):
-        # raw read (not conf.get): an unset registered conf must be
-        # restored by unset(), not by pinning its current default
-        self.prev = _raw_conf_get(self.spark, self.key)
-        self.spark.conf.set(self.key, self.value)
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self.key)
-        else:
-            self.spark.conf.set(self.key, self.prev)
-        return False
-
-
-class bucketed_sort_scan:
+class bucketed_sort_scan(scoped_conf):
     """Scope ``spark.sql.legacy.bucketedTableScan.outputOrdering=true``
     around the reads that want a sorted bucketed table's write-time
     sort advertised as the scan's outputOrdering (so Catalyst elides
@@ -210,19 +121,7 @@ class bucketed_sort_scan:
     KEY = "spark.sql.legacy.bucketedTableScan.outputOrdering"
 
     def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = _raw_conf_get(self.spark, self.KEY)
-        self.spark.conf.set(self.KEY, "true")
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self.KEY)
-        else:
-            self.spark.conf.set(self.KEY, self.prev)
-        return False
+        super().__init__(spark, self.KEY, "true")
 
 
 def sorted_lineitem(spark: SparkSession, sf_dir: str, num_buckets: int = 32):
@@ -303,11 +202,10 @@ def order_items(
     subsample so the driver hash executes the operator code paths at
     ~0.5% of the full-build cost.
 
-    ``base`` (r12) supplies a pre-projected lineitem frame so a hof
-    twin can build off a provided scan — the hook
-    scripts/hof_form_ab.py uses to rebuild the measured-and-rejected
-    single-scan cache form (see :func:`shared_lineitem`); ``fields``
-    must be a subset of its columns.
+    ``base`` supplies a pre-built lineitem frame to build from instead
+    of the parquet scan (e.g. the sorted bucketed table of
+    :func:`sorted_lineitem`); ``fields`` must be a subset of its
+    columns.
     """
     fields = fields or ITEM_FIELDS
     assert fields[0] == "l_linenumber", "linenumber must lead for deterministic sort"

@@ -18,6 +18,7 @@ from dask_awkward_sandbox_spark.plans.common import (
     cents,
     parquet_row_count,
     read,
+    scoped_conf,
     staged_stream_dir,
 )
 from dask_awkward_sandbox_spark.plans.registry import query
@@ -181,7 +182,7 @@ WATERMARK_US = 3600 * 1_000_000  # sessionize_stateful's 1-hour watermark
 
 
 
-class _scoped_stream_shuffle:
+class _scoped_stream_shuffle(scoped_conf):
     """Scope ``spark.sql.shuffle.partitions`` down for the streaming
     gate slots (r13): every stateful streaming operator allocates one
     state-store task PER shuffle partition PER micro-batch, and these
@@ -212,15 +213,8 @@ class _scoped_stream_shuffle:
     N = "16"
 
     def __init__(self, spark):
-        self.spark = spark
+        super().__init__(spark, "spark.sql.shuffle.partitions", self.N)
 
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.N)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
 
 @query(
     "q_stream_sessionize",

@@ -156,8 +156,7 @@ def q_flatten_softmax(spark, sf_dir, base=None):
     cache form collapsed 2-3x (q_cartesian_combinations sf10 10.2s
     two-scan vs 22.5s cache-in-panel: cache materialization +
     eviction under accumulated heap pressure), so the robust two-scan
-    shape ships; the A/B is recorded in SCALE_SF10.json (hof_form_ab)
-    and reproducible via scripts/hof_form_ab.py."""
+    shape ships; the A/B is recorded in SCALE_SF10.json (hof_form_ab)."""
     from pyspark.sql import Window
 
     ord_cols = [

@@ -16,6 +16,7 @@ Scale design: these configs are chosen to survive a 1000-executor /
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -75,6 +76,20 @@ def get_spark(app_name: str = "dask-awkward-sandbox-spark") -> SparkSession:
         # cluster this is per-executor and sized the same way.
         .config("spark.python.factory.idleWorkerMaxPoolSize", cpus)
         .config("spark.ui.enabled", "false")
+        # Plan building is driver-bound: with this on (the default),
+        # PySpark wraps every DataFrame/Column/functions call to record
+        # its Python call site in the JVM (errors/utils.py:_with_origin),
+        # which costs an active-session lookup, a conf read and two
+        # origin set/clear calls over Py4J plus a stack walk per call —
+        # most of the round-trips of a plan build (a repeated build of
+        # the five perfbench nested_hof plans on a 4-core box: about
+        # 7000 -> 1700-2900 Py4J calls, 1.2 -> 0.7 s).
+        # What is lost: error messages no longer carry the Python call
+        # site block; the error class, condition and JVM message stay.
+        # PySpark latches the flag process-wide at the first wrapped
+        # API call (_enable_debugging_cache), so it must be set here,
+        # when the session is built, not later with conf.set.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # r15: optional shuffle/scratch dir override (static conf, so it
     # must land at builder time). The TEST harness points this at
@@ -93,4 +108,68 @@ def get_spark(app_name: str = "dask-awkward-sandbox-spark") -> SparkSession:
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load every testdata table as a DataFrame (lazy parquet scans)."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}
+    from dask_awkward_sandbox_spark.io.parquet import read_parquet
+
+    return {t: read_parquet(spark, f"{sf_dir}/{t}.parquet") for t in TABLES}
+
+
+_warned_conf_fallback = False
+
+
+def _raw_conf_get(spark: SparkSession, key: str) -> str | None:
+    """The EXPLICITLY-SET session value of ``key``, or None when the
+    key is unset: ``spark.conf.get(key, None)`` returns a registered
+    SQL conf's entry DEFAULT instead of None when the key is unset, so
+    a restore path keyed on it would pin the default as an explicit
+    session value — value-equivalent today, but masking any later
+    default/entry change. The raw settings map only holds explicit
+    entries. It is private JVM surface; when it is unavailable the
+    public read is used and a warning is given once per process."""
+    global _warned_conf_fallback
+    try:
+        return spark._jsparkSession.sessionState().conf().settings().get(key)
+    except Exception:  # pragma: no cover — non-JVM session stand-ins
+        if not _warned_conf_fallback:
+            _warned_conf_fallback = True
+            warnings.warn(
+                "scoped_conf: the session's raw conf settings are not "
+                "readable; falling back to spark.conf.get, which restores "
+                "an unset conf as its explicit default",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        return spark.conf.get(key, None)
+
+
+class scoped_conf:
+    """Set one Spark SQL conf for the duration of a block and restore
+    the previous value (or unset) on exit. Only sound for confs read
+    at PLAN/EXECUTION time of work that both happens inside the block;
+    callers must run their eager actions inside the ``with``.
+
+    Concurrency: the conf is SESSION-GLOBAL — any query planned
+    concurrently on the same session while a block is open also sees
+    the scoped value. The bench/test harness runs queries
+    single-threaded per session, which is the assumption this helper
+    (and the module-level caches like lm._TOK_CACHE) rely on;
+    concurrent-driver deployments should scope confs per thread with
+    ``SparkSession.newSession()`` instead."""
+
+    def __init__(self, spark: SparkSession, key: str, value: str):
+        self.spark = spark
+        self.key = key
+        self.value = value
+
+    def __enter__(self):
+        # raw read (not conf.get): an unset registered conf must be
+        # restored by unset(), not by pinning its current default
+        self.prev = _raw_conf_get(self.spark, self.key)
+        self.spark.conf.set(self.key, self.value)
+        return self
+
+    def __exit__(self, *exc):
+        if self.prev is None:
+            self.spark.conf.unset(self.key)
+        else:
+            self.spark.conf.set(self.key, self.prev)
+        return False

@@ -6,7 +6,8 @@ re-measure the two GEMM slots whose panel cells moved without a code
 change (q_knn_join, q_ann_bruteforce) to separate box effect from
 real drift. Patches SCALE_SF10.json in place (sf1/sf10/growth/
 plan_stable) and appends the ``hof_form_ab`` block from
-scripts/hof_form_ab.py's output when present on stdin-file.
+/tmp/hof_form_ab.json when present (the output of the r12 A/B script,
+removed since; SCALE_SF10.json keeps the recorded block).
 """
 
 from __future__ import annotations

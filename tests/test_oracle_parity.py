@@ -64,6 +64,17 @@ def _query_names():
 
 NAMES, _ = _query_names()
 
+# The always-on subset of the sweep below: one TPC-H slot, one nested
+# HOF slot, one dedup slot and one join slot, so a default
+# `pytest tests/` run still checks values end to end against DuckDB
+# (the read path and the session confs every slot shares included).
+SMOKE = [
+    "q1_pricing_summary",
+    "q_reduce_order_count",
+    "q_dedup_minhash_clusters",
+    "q3_shipping_priority",
+]
+
 # r15 (verdict item 2, explicitly sanctioned): the full 50-slot
 # Spark-vs-DuckDB sweep is the single most expensive block of the
 # default suite (~2 min on a calm box, ~5 on a loaded one) and the
@@ -75,15 +86,14 @@ NAMES, _ = _query_names()
 # (optionally with DWAX_TEST_SF=/root/testdata/sf0.01). Setting
 # DWAX_TEST_SF alone also enables it — an explicit SF request is an
 # explicit run request.
-pytestmark = pytest.mark.skipif(
+_full_sweep = pytest.mark.skipif(
     os.environ.get("DWAX_ORACLE_TESTS") != "1"
     and "DWAX_TEST_SF" not in os.environ,
     reason="driver-covered oracle sweep; set DWAX_ORACLE_TESTS=1 to run",
 )
 
 
-@pytest.mark.parametrize("name", NAMES)
-def test_query_matches_oracle(spark, name):
+def _assert_matches_oracle(spark, name):
     from dask_awkward_sandbox_spark.plans import ORACLES, QUERIES
 
     sdf = QUERIES[name](spark, SF_DIR).toPandas()
@@ -101,3 +111,14 @@ def test_query_matches_oracle(spark, name):
         (a, b) for a, b in zip(srows, orows) if a != b
     ]
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
+
+
+@pytest.mark.parametrize("name", SMOKE)
+def test_oracle_smoke(spark, name):
+    _assert_matches_oracle(spark, name)
+
+
+@_full_sweep
+@pytest.mark.parametrize("name", NAMES)
+def test_query_matches_oracle(spark, name):
+    _assert_matches_oracle(spark, name)
